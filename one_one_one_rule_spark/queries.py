@@ -22,6 +22,7 @@ from .operators.cleanse import cleanse_fundamentals
 from .operators.valuate import apply_valuation, sector_median_stats
 from .plans.pipeline import run_fixture_pipeline
 from .sources.fixtures import load_table, synthetic_fundamentals
+from .streaming.events import drain_available_now
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -80,7 +81,8 @@ def _stage_parquet_slices(spark, slices, prefix: str) -> str:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=max(1, len(slices))) as pool:
+    # one thread per slice, bounded: callers stage 2-3 slices today
+    with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(lambda t: _write_one(*t), enumerate(slices)))
     return src
 
@@ -1505,38 +1507,11 @@ def _drain_stream(
     spark: SparkSession, sdf: DataFrame, name: str, mode: str,
     state_partitions: int = 4,
 ) -> DataFrame:
-    """Start + drain a streaming gate query (availableNow -> memory sink)
-    with a bounded number of state partitions.
-
-    Stateful streaming operators keep one state store per shuffle
-    partition (two PER SIDE for stream-stream joins), and each store pays
-    setup/commit/checkpoint overhead every micro-batch. The session
-    default (32) therefore spins up 32-128 stores holding kilobytes each
-    at gate scale - pure fixed cost. Pinning the drain to 8 cut that 4x
-    in a prior round; a round-13 sweep of the per-batch progress metrics
-    (commitTimeMs is per-store-INSTANCE fixed cost, ~40-55 ms each, not
-    bytes-bound — a tmpfs-vs-disk checkpoint A/B was flat) measured 8->4
-    worth another ~0.5-0.8 s on the stream-stream join gates and neutral
-    elsewhere, while 4->2 regressed the applyInPandasWithState gate
-    (Python-side parallelism halves), so 4 is the local floor. Results
-    are partition-count-invariant (exact aggregates / join row sets);
-    shuffle.partitions is restored afterwards. At production scale this
-    knob is sized to cluster cores x state volume (state partition count
-    is fixed at first start by the checkpoint, so it is a deploy-time
-    decision there, not a per-run one)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    """Drain a streaming gate query into a memory sink and return the
+    drained table (streaming/events.py:start_capped documents the
+    ``state_partitions`` cap)."""
+    writer = sdf.writeStream.format("memory").queryName(name).outputMode(mode)
+    drain_available_now(spark, writer, state_partitions)
     out = spark.table(name)
     # The resolved DataFrame pins the memory-sink relation; dropping the
     # uuid-suffixed catalog entry immediately keeps a full registry run from
@@ -1973,12 +1948,8 @@ def events_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = "stateful_gate_" + uuid.uuid4().hex[:12]
     stream = _events_stream(spark, sf_dir)
-    # state_partitions=8, not the drain default 4: this is the one gate
-    # whose per-batch work runs IN PYTHON (applyInPandasWithState), so
-    # partitions are also the Python-worker parallelism — a 6-rep
-    # interleaved A/B at local[32] measured 1.94 s (sp=8) vs 2.32 s
-    # (sp=4); the JVM-stateful gates go the other way (store-instance
-    # fixed cost dominates their kilobyte state).
+    # 8, not 4: the per-batch work runs in Python, so partitions are
+    # also worker parallelism (streaming/events.py:start_capped)
     drained = _drain_stream(
         spark, stateful_user_counts(stream), name, "update",
         state_partitions=8,
@@ -6090,12 +6061,7 @@ def events_stream_foreachbatch_sink(
         )
     )
     out_dir = _session_tmp_dir("fb_sink_")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        foreach_batch_overwrite_sink(rolled, out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    foreach_batch_overwrite_sink(rolled, out_dir)
     return spark.read.parquet(out_dir)
 
 
@@ -6514,7 +6480,7 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint-resume gate — proves exactly-once ACROSS A RESTART, the
     production property the single-run streaming gates skip.
 
-    Phase 1 stages only the first two time-slices of the events table and
+    Phase 1 exposes only the first two time-slices of the events table and
     drains the hourly rollup (streaming/events.py:
     foreach_batch_overwrite_sink) with an EXPLICIT checkpoint. The query
     then stops. Phase 2 adds the final slice and starts a NEW query on
@@ -6528,29 +6494,29 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Sliced along event time like the dated-file convention the
     reference's Drive layout implies (load_drive.py's per-run files)."""
     import os
-    import shutil
 
     from .streaming.events import foreach_batch_overwrite_sink
 
+    e = load_table(spark, sf_dir, "events")
+    staged = _stage_parquet_slices(
+        spark,
+        [
+            e.filter("ts < TIMESTAMP '2024-01-27 00:00:00'"),
+            e.filter(
+                "ts >= TIMESTAMP '2024-01-27 00:00:00'"
+                " AND ts < TIMESTAMP '2024-01-29 00:00:00'"
+            ),
+            e.filter("ts >= TIMESTAMP '2024-01-29 00:00:00'"),
+        ],
+        "resume_stage_",
+    )
     src = _session_tmp_dir("resume_src_")
     ckpt = _session_tmp_dir("resume_ckpt_")
     out = _session_tmp_dir("resume_out_")
-    e = load_table(spark, sf_dir, "events")
-    slices = [
-        "ts < TIMESTAMP '2024-01-27 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-27 00:00:00'"
-        " AND ts < TIMESTAMP '2024-01-29 00:00:00'",
-        "ts >= TIMESTAMP '2024-01-29 00:00:00'",
-    ]
 
-    def stage(i: int, pred: str) -> None:
-        part_dir = f"{src}/_part{i}"
-        e.filter(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        part = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        shutil.move(f"{part_dir}/{part}", f"{src}/{i:03d}.parquet")
-        shutil.rmtree(part_dir)
+    def publish(i: int) -> None:
+        # a rename keeps the staged mtime, so slice order survives
+        os.rename(f"{staged}/{i:03d}.parquet", f"{src}/{i:03d}.parquet")
 
     def run_pipeline() -> None:
         stream = (
@@ -6573,17 +6539,12 @@ def events_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(k).cast("bigint").alias("sum_k"),
             int_avg(k).alias("avg_k"),
         )
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            foreach_batch_overwrite_sink(rolled, out, checkpoint_dir=ckpt)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        foreach_batch_overwrite_sink(rolled, out, checkpoint_dir=ckpt)
 
-    stage(0, slices[0])
-    stage(1, slices[1])
+    publish(0)
+    publish(1)
     run_pipeline()  # phase 1: first two slices, checkpoint written
-    stage(2, slices[2])
+    publish(2)
     run_pipeline()  # phase 2: resumes from checkpoint, reads ONLY slice 2
     return spark.read.parquet(out)
 
@@ -6808,13 +6769,8 @@ def ann_ivf_stream_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(probe)
+    drain_available_now(spark, writer.option("checkpointLocation", ckpt))
     return _read_batch_partials(spark, store)
 
 

@@ -1020,15 +1020,17 @@ def quotes_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-stream gates: 48 deterministic ticks arrive over 3
     micro-batches (ticks_per_batch=16) and the complete-mode aggregate
     must equal the oracle's closed-form OHLC over the same pure price
-    function. Drained with processAllAvailable because availableNow
-    snapshots only the simple stream reader's PREFETCHED first batch —
-    the finite source (max_ticks) makes full drain deterministic.
+    function. The one gate that drains with processAllAvailable (capped
+    by streaming/events.py:start_capped): under availableNow Spark falls
+    back to one batch for a Python stream source — the finite source
+    (max_ticks) makes full drain deterministic.
     sf_dir is unused by construction: the source is synthetic, so the
     gate checks the streaming DataSource path itself (offset management,
     batch planning, replay), not table ingestion."""
     import uuid
 
     from .sources.quote_stream_datasource import QuoteStreamDataSource
+    from .streaming.events import start_capped
 
     spark.dataSource.register(QuoteStreamDataSource)
     name = "quotes_ohlc_" + uuid.uuid4().hex[:12]
@@ -1045,25 +1047,15 @@ def quotes_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("price_cents").cast("bigint").alias("low_cents"),
         F.max_by("price_cents", "tick").cast("bigint").alias("close_cents"),
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    q = None
+    writer = ohlc.writeStream.format("memory").queryName(name)
+    q = start_capped(spark, writer.outputMode("complete"))
     try:
-        q = (
-            ohlc.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
         q.processAllAvailable()
     finally:
         # stop even when the drain raises mid-batch — a leaked
         # default-trigger query would keep polling the drained source for
-        # the rest of the sweep (same convention as _drain_stream)
-        if q is not None:
-            q.stop()
-            q.awaitTermination()
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        # the rest of the sweep
+        q.stop()
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from .functions.numeric import decimal_sum
 from .queries import register
 from .sources.fixtures import load_table
+from .streaming.events import drain_available_now
 
 
 @register(
@@ -452,13 +453,8 @@ def _register_stream_incremental_dedup() -> None:
             .option("maxFilesPerTrigger", 1)
             .load(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer = stream.writeStream.foreachBatch(probe)
+        drain_available_now(spark, writer.option("checkpointLocation", ckpt))
         return _read_batch_partials(spark, out)
 
 
@@ -592,13 +588,8 @@ def events_stream_cms_heavy_hitters(
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(sketch_batch)
+    drain_available_now(spark, writer.option("checkpointLocation", ckpt))
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -891,13 +882,8 @@ def events_stream_quantile_sketch(
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(sketch_batch)
+    drain_available_now(spark, writer.option("checkpointLocation", ckpt))
 
     sketch = (
         _read_batch_partials(spark, store)
@@ -1149,13 +1135,8 @@ def events_stream_bottomk_sample(
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(sample_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(sample_batch)
+    drain_available_now(spark, writer.option("checkpointLocation", ckpt))
 
     merged = (
         _read_batch_partials(spark, store)

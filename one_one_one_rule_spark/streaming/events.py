@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -120,23 +121,55 @@ def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(
-    stream_df: DataFrame, table_name: str, output_mode: str = "append"
-) -> None:
-    """Drain the stream's current input with availableNow into an in-memory
-    table (test/dev helper; production sinks are parquet/kafka writers).
+def start_capped(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int = 4
+) -> StreamingQuery:
+    """Start ``writer`` with its state operators capped at
+    ``state_partitions`` shuffle partitions. The cap covers only
+    ``start()``: the query clones the session conf as it starts, so every
+    micro-batch plans with the cap (on Spark 4.1.2 the state operator
+    reported ``numShufflePartitions=4`` in each batch) while the session
+    keeps its own value for all other work during the drain.
 
-    Use output_mode='complete' for aggregations — with append, windows still
-    inside the watermark at end-of-input would never be emitted.
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    Stateful operators keep one state store per shuffle partition (two per
+    side for stream-stream joins), and each pays a fixed ~40-55 ms commit
+    per micro-batch whatever its size, so a 32-partition session spins up
+    32-128 stores holding kilobytes each at gate scale. 8 -> 4 saved
+    ~0.5-0.8 s on the stream-stream join gates and was neutral elsewhere;
+    4 -> 2 regressed the applyInPandasWithState gate, whose partitions are
+    also its Python-worker parallelism, so 4 is the local floor and that
+    gate passes 8 (1.94 s vs 2.32 s at 4, 6-rep A/B at local[32]). Results
+    are partition-count-invariant. A checkpoint fixes the count at first
+    start, so at production scale it is a deploy-time choice sized to
+    cluster cores x state volume."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(state_partitions))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, old)
+
+
+def drain_available_now(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int = 4
+) -> StreamingQuery:
+    """Drain the stream's current input through ``writer`` (sink, output
+    mode and any checkpoint already set by the caller) with the
+    availableNow trigger, capped as in ``start_capped``. Returns the
+    terminated query (``recentProgress`` holds the per-batch metrics); a
+    failed drain re-raises, after stopping the query if it still runs.
+    Windowed aggregations want output mode 'complete': 'append' never
+    emits windows still inside the watermark at end of input."""
+    q = start_capped(
+        spark, writer.trigger(availableNow=True), state_partitions
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        if q.isActive:
+            q.stop()
+    return q
 
 
 def purchase_click_join_stream(
@@ -262,8 +295,7 @@ def foreach_batch_overwrite_sink(
     w = stream_df.writeStream.foreachBatch(write_batch)
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain_available_now(stream_df.sparkSession, w.outputMode("complete"))
 
 
 def click_purchase_leftouter_stream(

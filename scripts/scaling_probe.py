@@ -150,6 +150,11 @@ SCALING_SET = [
      "band_bits_for_corpus(N) grows with log2 N, pinning per-band bucket "
      "occupancy so candidate volume stays ~linear — the hash-gated "
      "counterpart of the fixed-bits quadratic audit twin above"),
+    ("docs_bpe_compression", "documents", 1.30,
+     "shuffle is vocabulary-bounded: BPE trains on the word dictionary "
+     "(fixed merge rounds), and the encode join plus per-source "
+     "aggregate combine map-side, so records stay flat with corpus size "
+     "(measured 0.00); the bound is the linear ceiling"),
     ("customer_geo_neighbors", "customer", 1.50,
      "2D grid proximity join: the x9 cell explode is a fixed fan-out; "
      "CANDIDATE volume at a fixed radius grows with density (toward "

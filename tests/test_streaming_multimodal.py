@@ -8,6 +8,7 @@ extraction is deterministic, batch-shaped, and schema-stable.
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from one_one_one_rule_spark.operators.multimodal import (
@@ -18,8 +19,8 @@ from one_one_one_rule_spark.operators.multimodal import (
 from one_one_one_rule_spark.sources.fixtures import load_table
 from one_one_one_rule_spark.streaming.events import (
     dedup_stream,
+    drain_available_now,
     hourly_rollup_stream,
-    run_available_now,
     stream_events,
 )
 
@@ -33,11 +34,15 @@ def events_dir(spark, sf_dir, tmp_path_factory):
     return str(d / "events")
 
 
+def _memory(df, name, mode="append"):
+    return df.writeStream.format("memory").queryName(name).outputMode(mode)
+
+
 def test_streaming_rollup_converges_to_batch(spark, sf_dir, events_dir):
     stream = stream_events(spark, events_dir)
     assert stream.isStreaming
-    run_available_now(
-        hourly_rollup_stream(stream), "rollup_stream", output_mode="complete"
+    drain_available_now(
+        spark, _memory(hourly_rollup_stream(stream), "rollup_stream", "complete")
     )
     got = {
         (r.hour, r.event_type): (r.n_events, r.total_value, r.sum_k)
@@ -68,12 +73,59 @@ def test_streaming_rollup_converges_to_batch(spark, sf_dir, events_dir):
 
 def test_streaming_dedup(spark, events_dir):
     stream = stream_events(spark, events_dir)
-    run_available_now(dedup_stream(stream), "dedup_stream")
+    drain_available_now(spark, _memory(dedup_stream(stream), "dedup_stream"))
     n = spark.sql("SELECT COUNT(DISTINCT event_id) c FROM dedup_stream").collect()[
         0
     ].c
     total = spark.sql("SELECT COUNT(*) c FROM dedup_stream").collect()[0].c
     assert n == total  # no duplicate event_ids survive
+
+
+def _event_type_counts(spark, events_dir, callback):
+    """A stateful complete-mode groupBy drained through ``callback``."""
+    counts = stream_events(spark, events_dir).groupBy("event_type").count()
+    return counts.writeStream.foreachBatch(callback).outputMode("complete")
+
+
+def test_drain_caps_state_partitions_only_across_start(spark, events_dir):
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    seen = []
+
+    def record(bdf, batch_id):
+        seen.append(spark.conf.get(key))
+        bdf.collect()  # every state store must run and commit
+
+    try:
+        q = drain_available_now(
+            spark, _event_type_counts(spark, events_dir, record)
+        )
+        assert spark.conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, old)
+    # the drain ran while the session still read its own value ...
+    assert seen and set(seen) == {"6"}
+    # ... yet every batch's state operator planned with the cap
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops and {op.numShufflePartitions for op in ops} == {4}
+
+
+def test_drain_reraises_and_stops_on_callback_failure(spark, events_dir):
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "6")
+
+    def fail(bdf, batch_id):
+        raise RuntimeError("sink down")
+
+    try:
+        with pytest.raises(StreamingQueryException, match="sink down"):
+            drain_available_now(spark, _event_type_counts(spark, events_dir, fail))
+        assert spark.streams.active == []
+        assert spark.conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_multimodal_features_deterministic(spark, sf_dir):
@@ -133,15 +185,8 @@ def test_stateful_user_counts_converges_to_batch(spark, sf_dir, tmp_path):
     load_events(spark, sf_dir).write.mode("overwrite").parquet(src_dir)
 
     name = "stateful_counts_tbl"
-    q = (
-        stateful_user_counts(stream_events(spark, src_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    counts = stateful_user_counts(stream_events(spark, src_dir))
+    drain_available_now(spark, _memory(counts, name, "update"))
 
     final = (
         spark.table(name)
@@ -276,8 +321,8 @@ def test_tws_stateful_user_totals_converges_to_batch(spark, sf_dir, events_dir):
     )
 
     stream = stream_events(spark, events_dir)
-    run_available_now(
-        stateful_user_counts_tws(stream), "tws_totals", output_mode="update"
+    drain_available_now(
+        spark, _memory(stateful_user_counts_tws(stream), "tws_totals", "update")
     )
     got = {
         r.user_id: (r.n_events, r.total_value)
@@ -1250,10 +1295,9 @@ def test_streaming_rollup_on_rocksdb_state_store(spark, sf_dir, events_dir):
     spark.conf.set(key, rocks)
     try:
         stream = stream_events(spark, events_dir)
-        run_available_now(
-            hourly_rollup_stream(stream),
-            "rollup_rocksdb",
-            output_mode="complete",
+        drain_available_now(
+            spark,
+            _memory(hourly_rollup_stream(stream), "rollup_rocksdb", "complete"),
         )
         got = {
             (r.hour, r.event_type): (r.n_events, r.total_value, r.sum_k)
